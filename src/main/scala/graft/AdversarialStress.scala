@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Dedup, SetSimJoin}
 
-/** Adversarial-duplication stress ledger (round-13 verdict ask #1).
+/** Adversarial-duplication stress ledger.
   *
   * The ScaleRehearsal corpus is BENIGN — planted twins over a distinct
   * word-salad background — so its linear candidate growth says nothing
@@ -17,7 +17,7 @@ import graft.operators.{Components, Dedup, SetSimJoin}
   *
   *   - q23 family (minhashLshPairs, UNBOUNDED): verified pair count +
   *     wall — expected Θ(C²) per cluster, the blowup;
-  *   - the round-13 guard (minhashLshPairsBounded): pair count + wall
+  *   - the bounded guard (minhashLshPairsBounded): pair count + wall
   *     — expected Θ(C) per cluster (star emission);
   *   - lshBucketStats: max band-bucket size and the unbounded-vs-
   *     bounded candidate mass the two forms would emit;
@@ -44,15 +44,9 @@ import graft.operators.{Components, Dedup, SetSimJoin}
   * the corpus.
   *
   * Usage: sbt "runMain graft.AdversarialStress [baseDir]"
-  * Results trend in dev/PERF_LEDGER.md (round-13 section).
+  * Results trend in dev/PERF_LEDGER.md.
   */
 object AdversarialStress {
-
-  private def timed[T](body: => T): (Double, T) = {
-    val t0 = System.nanoTime()
-    val r = body
-    ((System.nanoTime() - t0) / 1e9, r)
-  }
 
   /** Embedding analogue of [[corpus]]: background vectors + 5 clusters
     * of C EXACT copies of the first 5 seed vectors. Copies carry
@@ -98,26 +92,24 @@ object AdversarialStress {
       .repartition(s.sparkContext.defaultParallelism)
   }
 
-  def main(args: Array[String]): Unit = {
-    val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Write `df` to `path` and read it back. Each loop iteration reads
+    * its corpus after every [[Harness.hygiene]] call, so the corpus
+    * must live in files, not in blocks hygiene unpersists.
+    */
+  private def staged(df: DataFrame, path: String): DataFrame = {
+    df.write.parquet(path)
+    df.sparkSession.read.parquet(path)
+  }
 
-    def hygiene(): Unit = {
-      CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-      System.gc()
-    }
+  def main(args: Array[String]): Unit = Harness.run() { spark =>
+    val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val stage = Harness.tempDir("graft_adv_")
+    def hygiene(): Unit = Harness.hygiene(spark)
+    import Harness.timed
 
     println(f"${"C"}%6s ${"op"}%-22s ${"rows"}%12s ${"secs"}%8s  note")
     for (c <- Seq(125, 250, 500, 1000)) {
-      val df = corpus(spark, baseDir, c).localCheckpoint(true)
+      val df = staged(corpus(spark, baseDir, c), s"$stage/docs_$c")
 
       // --- lshBucketStats: the accounting frame ---
       hygiene()
@@ -136,17 +128,17 @@ object AdversarialStress {
       }
       println(f"$c%6d ${"lsh_unbounded"}%-22s $nU%12d $tU%8.2f  pairs ~ 5*C(C,2) expected=${5L * c * (c - 1) / 2}")
 
-      // --- round-13 guard: bounded star ---
+      // --- bounded guard: star emission ---
       hygiene()
       val (tB, nB) = timed {
         Dedup.minhashLshPairsBounded(df, "doc_id", "text",
           threshold = 0.5, maxBucket = 64).count()
       }
       println(f"$c%6d ${"lsh_bounded"}%-22s $nB%12d $tB%8.2f  star ~ 5*(C-1) expected=${5L * (c - 1)}")
-      // r14 (verdict item 6): the banded-ids persist's live footprint
-      // under the duplication corpus — cache rows are (id, band_key)
-      // grain, one per doc×band REGARDLESS of bucket skew, so the
-      // bytes must track corpus size, never C².
+      // The banded-ids persist's live footprint under the duplication
+      // corpus — cache rows are (id, band_key) grain, one per doc×band
+      // REGARDLESS of bucket skew, so the bytes must track corpus size,
+      // never C².
       val si = spark.sparkContext.getRDDStorageInfo
       println(f"$c%6d ${"lsh_bounded_cache"}%-22s ${""}%12s ${""}%8s  " +
         f"mem=${si.map(_.memSize).sum / 1048576.0}%.1fMB disk=${si.map(_.diskSize).sum / 1048576.0}%.1fMB nRdd=${si.length}")
@@ -216,7 +208,7 @@ object AdversarialStress {
     // determinism argument) while components still reassemble the 5
     // clusters of C+1.
     for (c <- Seq(250, 500, 1000, 2000)) {
-      val df = embCorpus(spark, baseDir, c).localCheckpoint(true)
+      val df = staged(embCorpus(spark, baseDir, c), s"$stage/emb_$c")
 
       hygiene()
       val (tU, nU) = timed {
@@ -244,6 +236,5 @@ object AdversarialStress {
       println(f"$c%6d ${"emb_components"}%-22s ${compSizes.map(_._2).sum}%12d $tC%8.2f  " +
         s"size->n ${compSizes.mkString(",")} (expect 5 comps of ${c + 1})")
     }
-    spark.stop()
   }
 }

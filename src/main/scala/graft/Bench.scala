@@ -1,64 +1,37 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** The sweep: every `SparkEntry.queries` entry once, serially, in
+  * ASCII order, then interleaved cold re-runs of the 25 slowest.
+  * Prints one JSON line on stdout (its output contract) and per-query
+  * detail on stderr. Usage: `SPARK_GRAFT_SF_DIR=... runMain graft.Bench`.
+  */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up the JVM/Spark stack (class loading, codegen infra, parquet
-    // reader init) so the first timed query doesn't absorb ~15-20s of
-    // one-time cost and misrepresent per-query numbers.
-    spark.read.parquet(s"$sfDir/region.parquet")
-      .groupBy("r_name").count().collect()
-    // r14 (verdict item: the sweep swallowed per-query failures — a
-    // query that starts failing records its time-to-failure and the
-    // sweep still exits 0): failures are now counted into the JSON
-    // ("fails") and named on stderr, so a fast-fail can't masquerade
-    // as a speedup. The timed value stays the time-to-failure (the
-    // sweep total remains comparable); correctness still belongs to
-    // Verify/oracle.
+  def main(args: Array[String]): Unit = Harness.run() { spark =>
+    val sfDir = Harness.sfDir("sf0.1")
+    Harness.warmUp(spark, sfDir)
+    // A failing query keeps its time-to-failure (so the sweep total
+    // stays comparable) but is counted in "fails" and named on stderr:
+    // a fast failure must never read as a speedup. Correctness belongs
+    // to Verify and the oracle.
     val sweepFails = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
-        val t0 = System.nanoTime()
-        // noop sink materializes the FULL plan (count() would let the
-        // optimizer elide final sorts and unreferenced columns).
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          sweepFails += name
-          System.err.println(
-            s"BENCH_FAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        val (dt, _) = Harness.timed {
+          try Harness.noop(fn(spark, sfDir))
+          catch { case e: Throwable =>
+            sweepFails += name
+            System.err.println(
+              s"BENCH_FAIL $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          }
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // Inter-query hygiene, OUTSIDE the timed region: queries that
-        // persist/localCheckpoint intermediates (q23/q53 LSH cache, CC
-        // per-round checkpoints, IVF index) would otherwise leave
-        // blocks pinned in the block manager for the remaining ~100
-        // queries — accumulated pressure shows up as phantom
-        // regressions in whichever queries run late. A periodic GC
-        // nudges the ContextCleaner to reap dropped broadcasts too.
-        // hygiene is IDENTICAL for every query (a periodic-only GC gave
-        // whichever query followed it a privileged just-collected heap).
-        CacheRegistry.releaseAll()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        System.gc()
+        Harness.hygiene(spark)
         name -> dt
     }
-    // The harness that captures this output keeps only a bounded tail of
-    // the log (last ~2000 chars, with sbt's [success] line eating ~61).
-    // A {"qNN":cs} dict crossed that budget at ~185 queries (r4's format
-    // measured 1854 chars at 178), so per-query times are now a VALUES
-    // ARRAY in integer centiseconds ("qunit":"cs"), aligned with the
-    // ASCII-sorted qNN short names ("qkeys" documents this; ASCII sort
-    // of qNN prefixes is identical in Scala and python sorted()). ~4.3
-    // chars/query keeps the line parseable past 350 queries. Full names
-    // + precise seconds still go to stderr for humans (BENCH_DETAIL).
+    // The consumer keeps only a ~2000-char tail of the log, so per-query
+    // times ship as a VALUES ARRAY of integer centiseconds aligned with
+    // the ASCII-sorted qNN short names ("qkeys" documents this; ASCII
+    // sort of qNN prefixes is identical in Scala and Python). Full names
+    // and precise seconds go to stderr (BENCH_DETAIL).
     val short = (k: String) => if (k.matches("q\\d+_.*")) k.takeWhile(_ != '_') else k
     val qv = results.map { case (k, v) => short(k) -> math.round(v * 100) }
       .sortBy(_._1)
@@ -66,67 +39,37 @@ object Bench {
     val total = results.map(_._2).sum
     results.foreach { case (k, v) => System.err.println(f"BENCH_DETAIL $k $v%.3f") }
     System.err.flush()
-    // Self-de-noising pass: the sweep's slowest entries are historically
-    // bench-CONTEXT artifacts (page-cache and JIT state left by whatever
-    // ran before them — r5-r7 close runs all overstated this way, judge-
-    // verified serial re-runs were 3-10x lower). Re-measure the top-10
-    // residents serially (3 cold reps each, Bench-identical hygiene,
-    // median) and ship both the raw sweep total and the cold-adjusted
-    // total IN the artifact, so the trended number carries its own
-    // de-noising instead of needing an out-of-band DebugBench session.
-    // Round 13: the cold set is TOP-25 (was 10) — the host's measured
-    // 34-43% same-code ambient swings exceed any code effect in the
-    // raw sweep, so interleaved cold medians are the CANONICAL
-    // cross-round number (total_cold_adj below re-bases the 25
-    // heaviest residents on their cold medians; SWEEP.md documents the
-    // protocol). The JSON "c10" dict stays the top-10 slice to keep
-    // the one-line artifact inside the harness's ~2000-char log tail;
-    // all 25 ship as BENCH_COLD stderr lines for humans/ledgers.
-    val top10 = results.sortBy(-_._2).take(25)
-    // INTERLEAVED reps (rep r runs all 10 queries before any query's
-    // next rep): back-to-back reps 2-3 ran with that query's page
-    // cache and JIT fully warm, biasing the "cold" median low; with 9
-    // other heavy queries between a query's reps, each reading its own
-    // working set, the reps stay honestly cold. Failures are LOGGED
-    // and excluded — a query that fails fast must not contribute a
-    // near-zero time-to-failure to the median (it keeps its sweep time
-    // if every rep failed).
+    // Self-de-noising: the sweep's slowest entries carry page-cache and
+    // JIT state left by whatever ran before them, and ambient host swings
+    // exceed most code effects in the raw total. The 25 heaviest are
+    // re-measured cold, 3 INTERLEAVED reps each (rep r runs all 25 before
+    // any query's next rep, so no rep inherits its own warm working set),
+    // and total_cold_adj re-bases them on their medians. Failed reps are
+    // logged and excluded: a fast failure must not pull a median down
+    // (a query keeps its sweep time if every rep failed).
+    val top = results.sortBy(-_._2).take(25)
     val repTimes = scala.collection.mutable.Map.empty[String, List[Double]]
-    for (r <- 1 to 3; (name, _) <- top10) {
-      val fn = SparkEntry.queries(name)
-      CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        repTimes(name) = dt :: repTimes.getOrElse(name, Nil)
-      } catch {
+    for (r <- 1 to 3; (name, _) <- top) {
+      try repTimes(name) = Harness.coldRun(spark, name, sfDir) :: repTimes.getOrElse(name, Nil)
+      catch {
         case e: Throwable => System.err.println(
           s"BENCH_COLD_FAIL $name rep$r: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
-    val cold10 = top10.map { case (name, sweep) =>
+    val cold = top.map { case (name, sweep) =>
       val ts = repTimes.getOrElse(name, Nil).sorted
       // Lower-middle median: with an even rep count (a rep failed and was
       // dropped) ts(len/2) would pick the max and bias the trend high.
       name -> (if (ts.isEmpty) sweep else ts((ts.length - 1) / 2))
     }
-    cold10.foreach { case (k, v) => System.err.println(f"BENCH_COLD $k $v%.3f") }
+    cold.foreach { case (k, v) => System.err.println(f"BENCH_COLD $k $v%.3f") }
     System.err.flush()
-    val coldAdj = total - top10.map(_._2).sum + cold10.map(_._2).sum
-    // c10 keys are qNN short names, values integer centiseconds (same
-    // budget discipline as qv; ~12 chars/entry keeps the line <2000).
-    // Only the 10 heaviest of the 25-query cold set are serialized.
-    val c10 = cold10.take(10).map { case (k, v) => s""""${short(k)}":${math.round(v * 100)}""" }
+    val coldAdj = total - top.map(_._2).sum + cold.map(_._2).sum
+    // Only the 10 heaviest cold medians fit the line's size budget.
+    val c10 = cold.take(10).map { case (k, v) => s""""${short(k)}":${math.round(v * 100)}""" }
       .mkString("{", ",", "}")
-    // "cold_basis" PINS total_cold_adj's definition (r14, verdict
-    // item: r12 re-based the top-10 on cold medians, r13 the top-25 —
-    // the two values must not be trended across that change; from r13
-    // on the basis is top-25 permanently and the artifact says so).
+    // "cold_basis" pins total_cold_adj's definition so values computed
+    // on a different basis are never trended together.
     println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","total_cold_adj":$coldAdj%.2f,"cold_basis":"top25-cold-medians-since-r13","fails":${sweepFails.size},"c10":$c10,"qunit":"cs","nq":${results.size},"qkeys":"ASCII-sorted qNN prefixes of SparkEntry.queries keys","qv":$qv,"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.expr.PipelineConfig
@@ -31,8 +28,8 @@ import graft.schema.SchemaProvider
   * epoch-keyed sink, own DLQ — the shape of N topics or N partitions
   * of one topic under separate checkpoints) share ONE Spark session,
   * submitting their micro-batch jobs concurrently into the same
-  * local[32] scheduler. Near-linear aggregate rows/s across N is the
-  * Spark-native scaling claim made measurable; set
+  * `local[Harness.cpus]` scheduler. Near-linear aggregate rows/s
+  * across N is the Spark-native scaling claim made measurable; set
   * SPARK_GRAFT_STREAMS (default "1,2,4") to choose the axis.
   *
   * Accounting contract: every staged batch is non-empty by
@@ -42,24 +39,18 @@ import graft.schema.SchemaProvider
   * diagnosis instead of counting 0 and later mis-blaming the sink in
   * the `sunk == rows` reconciliation.
   *
+  * The topic, sink and DLQ dirs are temp dirs deleted when the run ends.
+  *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *   sbt "runMain graft.IngestBench"
   * Prints one JSON line; results trend in dev/PERF_LEDGER.md.
   */
 object IngestBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def main(args: Array[String]): Unit = Harness.run() { spark =>
+    val sfDir = Harness.sfDir("sf0.1")
     val streamCounts = sys.env.getOrElse("SPARK_GRAFT_STREAMS", "1,2,4")
       .split(",").map(_.trim.toInt).toSeq
     val batchSize = 25000L // main.py:569 — the reference's optimum
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // Stage the topic (untimed): one JSON message per event row,
     // partitioned by micro-batch id so each poll is a pruned scan, and
@@ -72,7 +63,7 @@ object IngestBench {
     // single-consumer, single-core shape.
     val topicParts = sys.env.getOrElse("SPARK_GRAFT_TOPIC_PARTS", "8").toInt
     val events = sources.Tables.events(spark, sfDir)
-    val topicDir = Files.createTempDirectory("graft_topic_").toString
+    val topicDir = Harness.tempDir("graft_topic_")
     events
       .select(expr(s"event_id div $batchSize").as("batch"),
         expr(s"event_id % $topicParts").as("tpart"),
@@ -101,8 +92,8 @@ object IngestBench {
       .filter(col("batch") === b).select(Pipeline.ValueCol)
 
     def freshOrchestrator(): (BatchOrchestrator, String) = {
-      val sinkDir = Files.createTempDirectory("graft_ingest_sink_").toString
-      val dlqDir = Files.createTempDirectory("graft_ingest_dlq_").toString
+      val sinkDir = Harness.tempDir("graft_ingest_sink_")
+      val dlqDir = Harness.tempDir("graft_ingest_dlq_")
       (new BatchOrchestrator(provider, cfg,
         new IdempotentParquetSink(sinkDir), new ParquetDlqSink(dlqDir), _ => ()),
         sinkDir)
@@ -169,6 +160,5 @@ object IngestBench {
       s""""s$n":${"%.0f".format(rows / dt)}"""
     }.mkString(",")
     println(f"""{"metric":"ingest_rows_per_sec","value":${rows1 / dt1}%.0f,"value_streams":1,"unit":"rows/s","streams":{$perStream},"rows":$rows1,"batches":$nBatches,"batch_size":$batchSize,"topic_parts":$topicParts,"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `.explain("formatted")` for named queries to files — the
-  * committed plan evidence for optimization rounds (plans/rNN/).
+  * committed plan evidence for optimization work (plans/).
   * Usage: sbt "runMain graft.PlanDump <outDir> <suffix> q154_...,q107_..."
   *        sbt "runMain graft.PlanDump <outDir> <suffix> all"
   * The plan is captured from the UNEXECUTED QueryExecution (initial
@@ -12,20 +11,13 @@ import java.nio.file.{Files, Paths}
   * df.explain("formatted") prints.
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Harness.run() { spark =>
     val outDir = args(0)
     val suffix = args(1)
     val names: Seq[String] =
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Harness.sfDir("sf0.1")
     Files.createDirectories(Paths.get(outDir))
     for (n <- names) {
       try {
@@ -38,10 +30,7 @@ object PlanDump {
         case e: Throwable =>
           System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
       }
-      CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.hygiene(spark)
     }
-    spark.stop()
   }
 }

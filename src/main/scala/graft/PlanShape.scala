@@ -10,15 +10,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** TYPED physical-plan profiling shared by the scale/plan harnesses.
   *
   * Why typed, not regex-over-plan-string: (a) `"Exchange".r` counts
-  * BroadcastExchange as a shuffle ("Exchange" is a substring), so a
-  * broadcast→shuffle bound silently mixes the two; (b) the plan STRING
-  * of a freshly planned query under AQE (Spark 4 default) is the
-  * INITIAL adaptive plan — runtime join-strategy conversions at scale
-  * (the exact regression ScaleRehearsal gates) never appear in it.
-  * Both are fixed here: node classes are matched exactly, and the
-  * count recurses through AdaptiveSparkPlanExec.executedPlan /
-  * QueryStageExec.plan (PlanAudit's recursion), so callers that
-  * EXECUTE the frame first read the AQE FINAL plan.
+  * BroadcastExchange and ReusedExchange as shuffles ("Exchange" is a
+  * substring), so a broadcast→shuffle bound silently mixes the two;
+  * (b) the plan STRING of a freshly planned query under AQE (Spark 4
+  * default) is the INITIAL adaptive plan — runtime join-strategy
+  * conversions at scale (the exact regression ScaleRehearsal gates)
+  * never appear in it. Both are fixed here: node classes are matched
+  * exactly, and the count recurses through
+  * AdaptiveSparkPlanExec.executedPlan / QueryStageExec.plan, so
+  * callers that EXECUTE the frame first read the AQE FINAL plan.
   */
 object PlanShape {
 
@@ -33,7 +33,7 @@ object PlanShape {
     * non-child field) and skipping ReusedExchange subtrees (the reused
     * exchange was already counted where it was planned).
     */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] =
+  def nodes(p: SparkPlan): Seq[SparkPlan] =
     p.collect { case x => x }.flatMap {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
       case q: QueryStageExec => q +: nodes(q.plan)
@@ -58,7 +58,7 @@ object PlanShape {
     * over the internal-row RDD — distributed, nothing collected) and
     * return the AQE FINAL plan's operator counts. A `noop`-sink write
     * runs a SEPARATE QueryExecution, whose adaptive plan this df never
-    * sees — that was ScaleRehearsal's original bug.
+    * sees.
     */
   def executedCounts(df: DataFrame): Map[String, Int] = {
     df.queryExecution.toRdd.foreachPartition(_ => ())

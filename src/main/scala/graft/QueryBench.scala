@@ -47,7 +47,7 @@ import org.apache.spark.sql.SparkSession
   * so the mix never runs in lockstep.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  *   sbt "runMain graft.QueryBench"           # runners axis 1,4,8,16
+  *   sbt "runMain graft.QueryBench"           # runners axis 1,8,16,24
   * SPARK_GRAFT_RUNNERS=1,2,4,8,16,24 overrides the axis. Prints one
   * JSON line; results trend in dev/PERF_LEDGER.md.
   */
@@ -68,23 +68,14 @@ object QueryBench {
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  // FAIR scheduling: the multi-tenant pool shape — a long graph
+  // fixpoint must not starve a sibling's point query, which is the
+  // first thing FIFO does under concurrent submitters.
+  def main(args: Array[String]): Unit = Harness.run("spark.scheduler.mode" -> "FAIR") { spark =>
+    val sfDir = Harness.sfDir("sf0.1")
     // Default axis brackets the measured knee (~16-24, PERF_LEDGER).
     val runnerCounts = sys.env.getOrElse("SPARK_GRAFT_RUNNERS", "1,8,16,24")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // FAIR scheduling: the multi-tenant pool shape — a long graph
-      // fixpoint must not starve a sibling's point query, which is the
-      // first thing FIFO does under concurrent submitters.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     /** Execute one mix query on the given (per-tenant) session in its
       * own cache scope; returns the result fingerprint. collect() is
@@ -111,10 +102,9 @@ object QueryBench {
     case class AxisRun(wall: Double, latencies: Vector[Double],
         execLats: Vector[Double], tenantWalls: Vector[Double])
 
-    // ADMISSION GATE (round-11 ledger follow-through: p95 tripled and
-    // fairness hit 1.49x at 24 ungated tenants; the ledger recommended
-    // capping admission near 8-16 but nothing ENFORCED it). A FAIR
-    // java Semaphore bounds how many queries EXECUTE simultaneously —
+    // ADMISSION GATE: ungated, p95 and fairness degrade sharply past
+    // the knee (PERF_LEDGER), so admission is ENFORCED. A FAIR java
+    // Semaphore bounds how many queries EXECUTE simultaneously —
     // arrivals past the cap queue in strict arrival order (the
     // fairness mechanism: a burst cannot starve an earlier tenant),
     // and each admitted query still runs in its tenant's own FAIR
@@ -240,6 +230,5 @@ object QueryBench {
     }.mkString(",")
     val gated = latJson(gatedRuns)
     println(f"""{"metric":"query_serve_qps","value":$qps1%.3f,"value_runners":1,"unit":"q/s","runners":{$axis},"latency":{$lat},"admit":$admitCap,"latency_gated":{$gated},"mix":${Mix.size},"parity":"ok","sf":"$sfDir"}""")
-    spark.stop()
   }
 }

@@ -2,15 +2,14 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
 import graft.streaming.StatefulSessions
 
-/** Streaming SOAK run (round-13 verdict ask #3): the rehearsal drains
-  * are single-session and a handful of micro-batches — state health
-  * over TIME was unmeasured. This drains a LONG topic (hundreds of
+/** Streaming SOAK run: the rehearsal drains are single-session and a
+  * handful of micro-batches, so they say nothing about state health
+  * over TIME. This drains a LONG topic (hundreds of
   * micro-batches via maxFilesPerTrigger=1) through q324-style
   * transformWithState sessionization on the RocksDB provider with
   * changelog checkpointing, recording PER BATCH:
@@ -23,6 +22,10 @@ import graft.streaming.StatefulSessions
   *   - trigger wall (latency trend: late-soak batches must not be
   *     systematically slower than early ones — state-size-dependent
   *     per-batch cost is exactly the leak this soak exists to catch).
+  *
+  * The topic is staged once per (nFiles, eventsDir) under /tmp and
+  * reused by later soaks (its `_STAGED` marker); checkpoint and output
+  * dirs are per run and deleted when it ends.
   *
   * Topic derivation: events sorted by event time and bucketed into N
   * ts-range files written SEQUENTIALLY (the file source picks new
@@ -54,21 +57,15 @@ object StreamSoak {
     }
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Harness.run(
+      // A stateful query's shuffle partitions are its state-store
+      // partitions: fixed, so soak curves compare across core counts.
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") { spark =>
     val baseDir = args.headOption.getOrElse("/tmp/graft_scale10x")
     val nFiles = if (args.length > 1) args(1).toInt else 300
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // --- stage the long topic: N ts-range files, written in order ---
     val ev = StatefulSessions.project(
@@ -97,8 +94,8 @@ object StreamSoak {
     val nKeys = ev.toDF().select("key").distinct().count()
 
     // --- the soak query: q324's sessionization, 1 file per trigger ---
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_soak_ckpt_").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_soak_out_").toString
+    val ckptDir = Harness.tempDir("graft_soak_ckpt_")
+    val outDir = Harness.tempDir("graft_soak_out_")
     case class B(batchId: Long, inRows: Long, stateRows: Long, updated: Long,
         removed: Long, memBytes: Long, sstBytes: Long, ckptBytes: Long, wallMs: Long)
     val log = ArrayBuffer[B]()
@@ -167,6 +164,5 @@ object StreamSoak {
       s"final state ($fin) never dropped below peak ($peak): eviction dead")
     require(late <= 2 * early,
       s"late-soak batches ($late ms) >2x early ($early ms): state-size-dependent cost")
-    spark.stop()
   }
 }
