@@ -52,24 +52,17 @@ object IngestBench {
       .split(",").map(_.trim.toInt).toSeq
     val batchSize = 25000L // main.py:569 — the reference's optimum
 
-    // Stage the topic (untimed): one JSON message per event row,
-    // partitioned by micro-batch id so each poll is a pruned scan, and
-    // WITHIN each batch by topic partition (SPARK_GRAFT_TOPIC_PARTS,
-    // default 8) — the multi-partition Kafka topic shape. One file per
-    // batch caps the decode at ONE core (a 25k-row micro-batch scans
-    // as a single parquet split); a real topic's partitions fetch and
-    // decode in parallel, and this is exactly what the Spark scan does
-    // with k files per batch dir. Set to 1 for the reference's
-    // single-consumer, single-core shape.
-    val topicParts = sys.env.getOrElse("SPARK_GRAFT_TOPIC_PARTS", "8").toInt
+    // Stage the topic (untimed): one JSON message per event row, one
+    // file per micro-batch id so each poll is a pruned scan of a single
+    // split — the reference's single-consumer shape. The orchestrator
+    // spreads each batch over the session's cores itself.
     val events = sources.Tables.events(spark, sfDir)
     val topicDir = Harness.tempDir("graft_topic_")
     events
       .select(expr(s"event_id div $batchSize").as("batch"),
-        expr(s"event_id % $topicParts").as("tpart"),
         to_json(struct(events.columns.map(col): _*)).as(Pipeline.ValueCol))
-      .repartition(col("batch"), col("tpart"))
-      .write.mode("overwrite").partitionBy("batch", "tpart").parquet(topicDir)
+      .repartition(col("batch"))
+      .write.mode("overwrite").partitionBy("batch").parquet(topicDir)
     // `batch` comes back Int-inferred from the partition directory names.
     val nBatches = spark.read.parquet(topicDir)
       .select(max(col("batch").cast("long"))).collect()(0).getLong(0) + 1
@@ -159,6 +152,6 @@ object IngestBench {
     val perStream = runs.map { case (n, rows, dt) =>
       s""""s$n":${"%.0f".format(rows / dt)}"""
     }.mkString(",")
-    println(f"""{"metric":"ingest_rows_per_sec","value":${rows1 / dt1}%.0f,"value_streams":1,"unit":"rows/s","streams":{$perStream},"rows":$rows1,"batches":$nBatches,"batch_size":$batchSize,"topic_parts":$topicParts,"sf":"$sfDir"}""")
+    println(f"""{"metric":"ingest_rows_per_sec","value":${rows1 / dt1}%.0f,"value_streams":1,"unit":"rows/s","streams":{$perStream},"rows":$rows1,"batches":$nBatches,"batch_size":$batchSize,"sf":"$sfDir"}""")
   }
 }

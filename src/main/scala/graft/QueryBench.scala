@@ -29,8 +29,9 @@ import org.apache.spark.sql.SparkSession
   *   - every query executes inside [[CacheRegistry.withScope]], so its
   *     tracked persists release on completion without touching a
   *     sibling's cached frames (Round13OpsSpec pins the parity);
-  *   - per-dataset staged frames (`stagedParquet`) build once behind
-  *     computeIfAbsent and are plain parquet reads afterwards.
+  *   - per-dataset staged frames (`stagedParquet`) build once through
+  *     `OnceCache` (a per-key holder; the build runs outside the map
+  *     lock) and are plain parquet reads afterwards.
   *
   * CORRECTNESS UNDER CONCURRENCY is asserted inline, not assumed: the
   * warm-up pass records a canonical fingerprint (MD5 over the sorted

@@ -201,7 +201,13 @@ final class JdbcRowSink(url: String, table: String, batchSize: Int = 25000)
   * not) redelivers only the missing partitions. Requires the batch's
   * partitioning to be deterministic across redeliveries — true for
   * Structured Streaming's replayed micro-batches (same offsets, same
-  * plan).
+  * plan). Behind `BatchOrchestrator`, a batch with fewer partitions
+  * than `spark.sql.shuffle.partitions` reaches this sink hash-spread
+  * over exactly that many partitions by its payload, so the claims
+  * repeat only while that setting does: a restart of one checkpoint
+  * under a different `spark.sql.shuffle.partitions` re-keys the
+  * claims of a redelivered batch (the `foreachBatch` frame reads the
+  * session's current value, not the one the offset log recorded).
   */
 final class IdempotentJdbcSink(url: String, table: String,
     ledgerTable: String, batchSize: Int = 25000) extends RecordSink {

@@ -24,6 +24,25 @@ import graft.types.ColumnMeta
   * This is the body the streaming job hands to `foreachBatch`; it is
   * batch-scoped and deterministic — the only cross-batch state is the
   * cached schema, exactly like the reference (SURVEY §2.5).
+  *
+  * Parallelism: a batch with fewer partitions than the session's
+  * `spark.sql.shuffle.partitions` (`n`) is first spread over `n`
+  * partitions by a hash of its payload ([[BatchOrchestrator.spread]]),
+  * so parse, validate, coerce and both sink writes run as `n` tasks
+  * rather than one. A single-file backlog or a single-partition Kafka
+  * topic (the reference's single-consumer shape) otherwise runs every
+  * stage of every batch on one core. A batch with at least `n`
+  * partitions is processed as it arrives. The payload hash sends a
+  * redelivered batch's rows to the same partitions again, which the
+  * partition-keyed ledger of `IdempotentJdbcSink` relies on — provided
+  * `n` is the same on the redelivery: the `foreachBatch` frame's
+  * session reads the CURRENT conf, not the value the offset log
+  * recorded, so keep `spark.sql.shuffle.partitions` fixed across
+  * restarts of one checkpoint. For the same reason the spread does not
+  * look at load: where concurrent streams already fill the cores it
+  * adds only its shuffle (about 10% fewer rows/s at 4 streams on 4
+  * cores, `dev/PERF_LEDGER.md`), but skipping it under load would make
+  * a redelivered batch's partitioning depend on timing.
   */
 final class BatchOrchestrator(
     provider: SchemaProvider,
@@ -60,11 +79,12 @@ final class BatchOrchestrator(
 
   def processBatch(raw: DataFrame, batchId: Long): Unit = {
     val t0 = System.nanoTime()
+    val batch = BatchOrchestrator.spread(raw)
     // The valid-row path is epoch-keyed (exactly-once under an
     // idempotent sink); DLQ writes stay at-least-once — duplicate
     // diagnostic envelopes on a redelivered batch are acceptable, as
     // in the reference (a retried batch re-produces to the DLQ topic).
-    val res = Pipeline.process(raw, metas(), cfg)
+    val res = Pipeline.process(batch, metas(), cfg)
     val (validObs, validDf) = observed(res.valid)
     val firstAttempt: Either[Exception, Boolean] =
       try { insertAttempts += 1; Right(validSink.write(validDf, batchId)) }
@@ -80,7 +100,7 @@ final class BatchOrchestrator(
         // Schema drift path: rebuild schema, re-validate the ORIGINAL
         // payloads (not the already-coerced rows), retry the insert
         // once (main.py:434-445).
-        val res2 = Pipeline.process(raw, refreshMetas(), cfg)
+        val res2 = Pipeline.process(batch, refreshMetas(), cfg)
         val (validObs2, validDf2) = observed(res2.valid)
         val wroteValid2 =
           try { insertAttempts += 1; validSink.write(validDf2, batchId) }
@@ -152,6 +172,21 @@ object BatchOrchestrator {
     * driver is saturated; a hit is logged, never silent.
     */
   val DefaultMetricWaitMs: Long = 10000L
+
+  /** `raw` itself when it already has at least `n` =
+    * `spark.sql.shuffle.partitions` partitions, else `raw` hash-
+    * partitioned on its payload into exactly `n`. The explicit count
+    * keeps AQE from coalescing the (small) shuffle back into one
+    * partition; the hash, unlike round-robin, needs no local sort to
+    * be deterministic across redeliveries. The partition count comes
+    * from the RDD: a `foreachBatch` frame's plan reports an unknown
+    * partitioning, and its already-built RDD answers without a job.
+    */
+  private[graft] def spread(raw: DataFrame): DataFrame = {
+    val n = raw.sparkSession.sessionState.conf.numShufflePartitions
+    if (raw.queryExecution.toRdd.getNumPartitions >= n) raw
+    else raw.repartition(n, col(Pipeline.ValueCol))
+  }
 }
 
 /** Per-batch processing telemetry (the reference's per-batch log:

@@ -289,6 +289,26 @@ class StreamingSpec extends SparkSpec {
         assert(ledger.keySet == Set(0L, 1L) && ledger.values.forall(_ >= 1),
           s"one claim set per epoch: $ledger")
       } finally check.close()
+
+      // A one-partition epoch is hash-spread before the sink; the
+      // redelivery must land every row on the same (batch, partition)
+      // claim again.
+      val single = raw.coalesce(1)
+      orch.processBatch(single, 2L)
+      orch.processBatch(single, 2L)
+      val check2 = java.sql.DriverManager.getConnection(url)
+      try {
+        val rs = check2.createStatement().executeQuery(
+          "SELECT device_id, count(*) FROM sink_x GROUP BY device_id ORDER BY device_id")
+        val got = Iterator.continually(rs)
+          .takeWhile(_.next()).map(r => (r.getLong(1), r.getLong(2))).toSeq
+        assert(got == (1 to 8).map(i => (i.toLong, 3L)),
+          s"redelivered one-partition epoch must not duplicate: $got")
+        val lr = check2.createStatement().executeQuery(
+          "SELECT count(*) FROM sink_ledger WHERE batch_id = 2")
+        lr.next()
+        assert(lr.getLong(1) > 1, "the one-partition epoch was spread over several claims")
+      } finally check2.close()
     } finally {
       try java.sql.DriverManager.getConnection(s"jdbc:derby:memory:$db;drop=true")
       catch { case _: java.sql.SQLException => () }
@@ -492,5 +512,45 @@ class StreamingSpec extends SparkSpec {
     val batch = batchRes.valid.collect().map(_.toString).sorted
     batchRes.release()
     assert(streamed.toSeq == batch.toSeq)
+  }
+
+  test("spread: a one-partition streamed batch runs as n tasks with batch-level presence intact") {
+    import spark.implicits._
+    // `note` appears in exactly one row: presence is a property of the
+    // whole batch (main.py:257), not of the partition that row hashes to.
+    val payloads = (1 to 200).map(i =>
+      if (i == 17) s"""{"device_id": $i, "note": "only", "event_time": "2024-05-01 10:00:00"}"""
+      else s"""{"device_id": $i}""") ++
+      Seq("""{"note": "missing required"}""", "{broken", "   ")
+    val validDir = tmp(); val dlqDir = tmp()
+    val orch = runStream(payloads, new ParquetSink(validDir), new ParquetDlqSink(dlqDir))
+    val s = orch.lastStats.get
+    assert(s.validRows.contains(200L) && s.dlqRows.contains(2L), s"counts: $s")
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val files = new java.io.File(validDir).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(files == n, s"the valid write must run as $n tasks, wrote $files files")
+    val streamed = spark.read.parquet(validDir).collect().map(_.toString).sorted
+    val batchRes = graft.pipeline.Pipeline.process(
+      payloads.toDF(graft.pipeline.Pipeline.ValueCol).coalesce(1),
+      provider.resolveFiltered(), cfg, share = false)
+    val batch = batchRes.valid.collect().map(_.toString).sorted
+    assert(streamed.toSeq == batch.toSeq)
+    assert(streamed.count(_.contains("only")) == 1)
+  }
+
+  test("spread: below n partitions hash-spreads to exactly n; at or above n passes through") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    import org.apache.spark.sql.functions.col
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val raw = spark.range(0, 100, 1, n)
+      .select(col("id").cast("string").as(graft.pipeline.Pipeline.ValueCol))
+    def repartitions(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.collect { case r: RepartitionByExpression => r }
+    val wide = BatchOrchestrator.spread(raw)
+    assert(wide eq raw)
+    assert(repartitions(wide).isEmpty)
+    val narrow = BatchOrchestrator.spread(raw.coalesce(1))
+    assert(repartitions(narrow).map(_.numPartitions) == Seq(n))
+    assert(narrow.queryExecution.toRdd.getNumPartitions == n)
   }
 }
